@@ -434,8 +434,8 @@ def top_k(
     (score == k-th largest) break by smallest doc_id, selected with
     a second partition on the ids, so no input ordering is assumed."""
     n = ids.size
-    if n == 0:
-        return ids, scores
+    if n == 0 or k <= 0:
+        return ids[:0], scores[:0]
     if k >= n or n <= 4096:
         order = np.lexsort((ids, -scores))[:k]
         return ids[order], scores[order]

@@ -1,7 +1,15 @@
-"""Segment executor: per-shard block-decode + block-max pruned
-evaluation inside ``applyInPandas``, then a k-row global merge.
+"""Segment executor: block-decode + block-max pruned evaluation of
+one shard's postings at a time, then a k-row global merge. Two lanes
+run the same shard kernel (`_make_kernel`):
 
-Architecture (doc-partitioned, SURVEY.md §3.4):
+  * the driver lane, for small non-positional top-k plans: ONE Arrow
+    collect (`toArrow`) of the pruned, term-filtered segment slice
+    without its positions columns, the kernel per shard in this
+    process (as `local_serve.LocalSearcher` does), and the (score
+    desc, doc_id asc) merge with `eval_local.top_k`. The k rows come
+    back as a local relation, so the query costs one scan job and no
+    Python-worker stage.
+  * the per-shard lane, for everything else:
 
   segments parquet ──filter(term IN query terms / startswith / range
       predicates, see _term_filter)──  [parquet predicate pushdown +
@@ -13,6 +21,37 @@ Architecture (doc-partitioned, SURVEY.md §3.4):
       top-k only
     ──orderBy(score desc, doc_id).limit(k)──  global merge of
       num_shards * k rows -> TakeOrderedAndProject (no full shuffle).
+
+A plan takes the driver lane unless it needs the doc universe (NOT,
+meta filters, match-all, or more than TOMBSTONE_SHIP_MAX tombstones),
+needs positions (phrases: a hot term's positions decode is many MB),
+or its estimated block count is over DRIVER_LANE_MAX_BLOCKS (`k=None`
+never reaches either lane). The estimate uses driver-side data only —
+the DriverDictionary df of each plan term / block_size, plus one block
+per shard — so choosing a lane never runs a Spark job; with a
+PushdownDictionary every plan takes the per-shard lane.
+
+Crossover, measured on a 4-vCPU Intel Xeon VM, Spark local[4], k=10,
+hot-term ORs (plus one AND NOT shape) over fixtures.generate_docs
+indexes (4 shards, block_size 128), median of 5 runs (3 for 8+ terms)
+per lane, interleaved:
+
+  docs   query                          est blocks  driver  per-shard
+  20k    cats                                   34   197 ms    506 ms
+  20k    import OR def                         320   190 ms    516 ms
+  20k    six hot terms OR                      957   292 ms    524 ms
+  100k   import OR def OR return              2350   300 ms    700 ms
+  100k   six hot terms OR                     4689   562 ms    779 ms
+  400k   import AND NOT def                   6235   365 ms   1168 ms
+  400k   import OR def OR return              9364  1153 ms   1732 ms
+  400k   six hot terms OR                    18683  2061 ms   2547 ms
+  400k   8-term OR                           24842  2796 ms   2922 ms
+  400k   12-term OR                          36166  3455 ms   3372 ms
+  400k   18-term OR                          50529  4665 ms   3604 ms
+
+The lanes cross between 25k and 36k estimated blocks; the threshold
+sits below that. At 18.7k blocks the driver lane's peak resident
+memory grew by about 50 MB.
 
 Block-max pruning (BASELINE.json:6 "block-max WAND pruning"): for
 flat disjunctions/conjunctions of scored terms the kernel skips
@@ -30,27 +69,36 @@ build time — a vectorized MaxScore/BMW hybrid:
 
 For trees that are not flat term booleans the kernel decodes the
 (already term-filtered) blocks exhaustively — still numpy-vectorized
-and shard-local. Pruned and exhaustive paths are asserted equal in
-tests (tests/test_engine_wand.py).
+and shard-local. Pruned and exhaustive paths, and the two lanes, are
+asserted equal in tests (tests/test_engine_wand.py).
 """
 
 from __future__ import annotations
 
 from collections import OrderedDict
+from concurrent.futures import ThreadPoolExecutor
 from typing import Dict, List, Optional, Tuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (
+    DoubleType, LongType, StructField, StructType,
+)
 
 from lucille_spark import plans as P
 from lucille_spark.codec import bitpack_decode, varbyte_decode
 from lucille_spark.pushdown import expand_condition, file_prune_bounds
 from lucille_spark.eval_local import Posting, ShardData, evaluate, top_k
-from lucille_spark.index.reader import SparkIndex
+from lucille_spark.index.reader import DriverDictionary, SparkIndex
 
 OUT_SCHEMA = "doc_id long, score double"
+_OUT_STRUCT = StructType(
+    [StructField("doc_id", LongType()), StructField("score", DoubleType())]
+)
 
 # posting-block codecs by the name recorded in stats.json at build
 DECODERS = {"varbyte": varbyte_decode, "bitpack": bitpack_decode}
@@ -63,6 +111,12 @@ DECODERS = {"varbyte": varbyte_decode, "bitpack": bitpack_decode}
 # multi-MB closure per task (ADVICE r2 #2).
 TOMBSTONE_SHIP_MAX = 100_000
 
+# Largest estimated posting-block count (_estimated_blocks) a query
+# may touch and still be answered in the driver lane; past it the
+# per-shard lane's parallel kernels win. Crossover table in the module
+# docstring.
+DRIVER_LANE_MAX_BLOCKS = 20_000
+
 
 def _tombstones(ix):
     """-> (deleted, mark_dl): `deleted` is None, a sorted np array
@@ -74,6 +128,34 @@ def _tombstones(ix):
     if n <= TOMBSTONE_SHIP_MAX:
         return ix.deleted_ids, False
     return "dl", True
+
+
+def _estimated_blocks(ix, terms) -> Optional[float]:
+    """Upper bound on the posting blocks `terms` span, from driver-side
+    data only: per term df / block_size, plus one partial block per
+    shard. None when the index cannot say without a Spark job (a
+    PushdownDictionary, or stats without the block layout)."""
+    bs = ix.stats.get("block_size")
+    shards = ix.stats.get("num_shards")
+    if not (isinstance(ix.dictionary, DriverDictionary) and bs and shards):
+        return None
+    dfs = ix.dictionary.lookup_df(terms)
+    return sum(df / bs + shards for df in dfs.values())
+
+
+def local_frame(spark, rows, schema: StructType) -> DataFrame:
+    """A DataFrame over rows already in the driver that runs no Spark
+    job when collected. The rows go in as an Arrow table, which Spark
+    turns into a LocalRelation whether or not the session enables Arrow;
+    `createDataFrame(rows)` would parallelize them, one job per
+    collect. Columns are taken by position, so duplicate names
+    survive."""
+    asch = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], f.type) for i, f in enumerate(asch)],
+        schema=asch,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def _mark_deleted(dl: DataFrame, ix) -> DataFrame:
@@ -119,17 +201,28 @@ class WandExecutor:
             if not ts:
                 return
             t1, t2 = ts[0], ts[-1]
-            # pass plan NODES: node queries skip the string-keyed
-            # plan cache, so warmup leaves it untouched. Two shapes
-            # compile the two distinct kernels: the plain groupBy-
-            # apply (term/OR union predicate) and the cogroup path
-            # (NOT needs the doc universe -> segments x doclens).
-            self.search(self.ix.plan(f"{t1} OR {t2}"), k=1).collect()
-            self.search(
-                self.ix.plan(f"{t1} AND NOT {t2}"), k=1
-            ).collect()
+            # pass plan NODES: node queries skip the string-keyed plan
+            # cache, so warmup leaves it untouched. One shape per
+            # lane: a small OR takes the driver lane (Arrow collect),
+            # a phrase the plain groupBy-apply (positional plans stay
+            # per shard), and a pure NOT the cogroup path (the doc
+            # universe -> segments x doclens).
+            nodes = [
+                self.ix.plan(q)
+                for q in (f"{t1} OR {t2}", f'"{t1} {t2}"', f"NOT {t2}")
+            ]
+            _tombstones(self.ix)  # load the delete set before sharing
         except Exception:
-            pass
+            return
+        # the three are independent jobs: run them concurrently, so
+        # warming the third lane costs no more start-up time
+        with ThreadPoolExecutor(len(nodes)) as pool:
+            futs = [
+                pool.submit(lambda n=n: self.search(n, k=1).collect())
+                for n in nodes
+            ]
+        for f in futs:
+            f.exception()  # a failed probe only leaves its lane cold
 
     def search(
         self, query, k: int = 10, with_meta: bool = False,
@@ -182,12 +275,89 @@ class WandExecutor:
             segs = ix.segments
         if terms:
             segs = segs.filter(_term_filter(node, terms))
-        need_uni = P.needs_universe(node)
-        avgdl = float(ix.stats["avg_dl"])
-        meta_cols = list(ix.stats.get("meta_cols", []))
-        decode = DECODERS[ix.stats.get("codec", "varbyte")]
         deleted, mark_dl = _tombstones(ix)
-        need_uni = need_uni or mark_dl  # 'dl' needs the doclens slice
+        # 'dl' tombstones need the doclens slice
+        need_uni = P.needs_universe(node) or mark_dl
+        est = None
+        if not need_uni and not P.needs_positions(node):
+            est = _estimated_blocks(ix, terms)
+        if est is not None and est <= DRIVER_LANE_MAX_BLOCKS:
+            out = self._driver_lane(
+                node, segs if est else None, k, deleted, doc_boosts
+            )
+        else:
+            out = self._shard_lane(
+                node, segs, k, need_uni, mark_dl, deleted, with_meta,
+                doc_boosts,
+            )
+        if with_meta and not need_uni:
+            # (the cogrouped shard lane emits the meta columns itself)
+            meta = ix.doclens.drop("shard", "doc_len")
+            # broadcast the K-ROW result side, stream doclens: a left
+            # join would force doclens as the build side (full
+            # shuffle/hash of the corpus at scale); every result id
+            # exists in doclens, so inner == left here
+            out = meta.join(F.broadcast(out), "doc_id").select(
+                "doc_id", "score",
+                *[c for c in meta.columns if c != "doc_id"],
+            ).orderBy(F.desc("score"), F.asc("doc_id"))
+        if cache_key is not None:
+            self._plan_cache[cache_key] = out
+            if len(self._plan_cache) > self.PLAN_CACHE_MAX:
+                self._plan_cache.popitem(last=False)
+        return out
+
+    def _kernel(self, node, k, need_uni, deleted, meta_out=None):
+        """The shard kernel both lanes run (see _make_kernel)."""
+        stats = self.ix.stats
+        return _make_kernel(
+            node, float(stats["avg_dl"]), k, self.prune, need_uni,
+            list(stats.get("meta_cols", [])),
+            DECODERS[stats.get("codec", "varbyte")], deleted, meta_out,
+            stats_acc=getattr(self, "profile_acc", None),
+        )
+
+    def _driver_lane(self, node, segs, k, deleted, doc_boosts) -> DataFrame:
+        """One Arrow collect of the term-filtered segment slice, the
+        shard kernel run per shard in this process, and the (score
+        desc, doc_id asc) merge -> a k-row frame that runs no job.
+        `segs` None: no plan term has postings, so nothing matches and
+        nothing is read."""
+        ids_l, sc_l = [], []
+        if segs is not None:
+            kernel = self._kernel(node, k, False, deleted)
+            # positional plans never take this lane: leave the
+            # positions columns (the bulk of the bytes) unread
+            pdf = segs.drop("pos_counts", "positions").toArrow().to_pandas()
+            for _, part in pdf.groupby("shard", sort=False):
+                res = kernel(part.reset_index(drop=True))
+                ids_l.append(res["doc_id"].to_numpy(dtype=np.int64))
+                sc_l.append(res["score"].to_numpy(dtype=np.float64))
+        ids = np.concatenate(ids_l) if ids_l else np.empty(0, np.int64)
+        scores = (np.concatenate(sc_l) if sc_l
+                  else np.empty(0, np.float64))
+        if doc_boosts:
+            # the CASE of exec_df._boost_case: the last matching
+            # range wins, ids outside every range keep 1.0
+            f = np.ones(ids.size)
+            for lo, hi, fct in doc_boosts:
+                f[(ids >= int(lo)) & (ids < int(hi))] = float(fct)
+            scores = scores * f
+        ids, scores = top_k(ids, scores, k)
+        return local_frame(
+            self.ix.doclens.sparkSession,
+            list(zip(ids.tolist(), scores.tolist())),
+            _OUT_STRUCT,
+        )
+
+    def _shard_lane(
+        self, node, segs, k, need_uni, mark_dl, deleted, with_meta,
+        doc_boosts,
+    ) -> DataFrame:
+        """Per-shard applyInPandas kernels, then the global merge of
+        num_shards * k rows. With the doc universe cogrouped and
+        `with_meta`, the kernel also emits the meta columns."""
+        ix = self.ix
         # meta fold: when the kernel already cogroups doclens, it
         # emits the meta columns for its local top-k directly — one
         # fewer scan + exchange than the post-hoc join (with_meta on
@@ -205,16 +375,13 @@ class WandExecutor:
             schema = OUT_SCHEMA + "".join(
                 f", {c} {dl_schema[c]}" for c in meta_out
             )
-        kernel = _make_kernel(
-            node, avgdl, k, self.prune, need_uni, meta_cols, decode,
-            deleted, meta_out,
-            stats_acc=getattr(self, "profile_acc", None),
-        )
+        kernel = self._kernel(node, k, need_uni, deleted, meta_out)
         if need_uni:
             # cogroup segments with the shard's doclens slice so the
             # kernel has the doc universe + metadata columns
             dl_cols = set(
-                ["shard", "doc_id", "doc_len", *meta_cols] + meta_out
+                ["shard", "doc_id", "doc_len",
+                 *ix.stats.get("meta_cols", [])] + meta_out
             )
             dl = ix.doclens.select(
                 *[c for c in ix.doclens.columns if c in dl_cols]
@@ -233,22 +400,7 @@ class WandExecutor:
             local = local.withColumn(
                 "score", F.col("score") * _boost_case(doc_boosts)
             )
-        out = local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        if with_meta and not meta_out:
-            meta = ix.doclens.drop("shard", "doc_len")
-            # broadcast the K-ROW result side, stream doclens: a left
-            # join would force doclens as the build side (full
-            # shuffle/hash of the corpus at scale); every result id
-            # exists in doclens, so inner == left here
-            out = meta.join(F.broadcast(out), "doc_id").select(
-                "doc_id", "score",
-                *[c for c in meta.columns if c != "doc_id"],
-            ).orderBy(F.desc("score"), F.asc("doc_id"))
-        if cache_key is not None:
-            self._plan_cache[cache_key] = out
-            if len(self._plan_cache) > self.PLAN_CACHE_MAX:
-                self._plan_cache.popitem(last=False)
-        return out
+        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
     def search_many(
@@ -479,14 +631,17 @@ def _term_filter(node: P.PNode, all_terms: List[str]):
 
 
 def _decode_block(
-    row, decode=varbyte_decode
+    row, decode=varbyte_decode, want_positions: bool = True
 ) -> Tuple[np.ndarray, np.ndarray, np.ndarray, Optional[list]]:
+    """-> (ids, tfs, dls, per-doc positions or None). Positions are
+    decoded only when wanted and stored (the row may not even carry
+    the positions columns when they are not wanted)."""
     gaps = decode(row.ids_delta).astype(np.int64)
     ids = row.doc_id_base + np.cumsum(gaps)
     tfs = decode(row.tfs).astype(np.int64)
     dls = decode(row.dls).astype(np.int64)
     poss = None
-    if row.pos_counts is not None:
+    if want_positions and row.pos_counts is not None:
         counts = decode(row.pos_counts).astype(np.int64)
         deltas = decode(row.positions).astype(np.int64)
         if counts.size == 0:
@@ -524,20 +679,19 @@ def _build_posting(
     deleted: Optional[np.ndarray] = None,
 ) -> Posting:
     ids_l, tfs_l, dls_l, pos_l = [], [], [], []
-    has_pos = True
+    keep_pos = want_positions
     for row in rows.itertuples():
-        ids, tfs, dls, poss = _decode_block(row, decode)
+        ids, tfs, dls, poss = _decode_block(row, decode, want_positions)
         ids_l.append(ids)
         tfs_l.append(tfs)
         dls_l.append(dls)
         if poss is None:
-            has_pos = False
+            keep_pos = False
         else:
             pos_l.extend(poss)
     ids = np.concatenate(ids_l)
     tfs = np.concatenate(tfs_l)
     dls = np.concatenate(dls_l)
-    keep_pos = has_pos and want_positions
     if ids.size > 1 and (np.diff(ids) <= 0).any():
         # runs from different build partitions may interleave doc
         # ranges; evaluation requires ascending unique ids

@@ -18,7 +18,7 @@ from typing import Dict, List, Optional, Tuple
 from pyspark.sql import DataFrame, SparkSession
 
 from lucille_spark.exec_df import DataFrameExecutor
-from lucille_spark.exec_wand import WandExecutor
+from lucille_spark.exec_wand import WandExecutor, local_frame
 from lucille_spark.index.reader import SparkIndex
 
 
@@ -197,7 +197,7 @@ class Searcher:
                 self._rcache.move_to_end(key)
                 schema, rows = hit
                 spark = self.index.doclens.sparkSession
-                return spark.createDataFrame(rows, schema)
+                return local_frame(spark, rows, schema)
             self._rcache_misses += 1
         out = self.executor.search(
             query, k=k, with_meta=with_meta, synonyms=synonyms,
@@ -209,7 +209,7 @@ class Searcher:
             while len(self._rcache) > self._rcache_max:
                 self._rcache.popitem(last=False)
             spark = self.index.doclens.sparkSession
-            return spark.createDataFrame(rows, out.schema)
+            return local_frame(spark, rows, out.schema)
         return out
 
     def _resolve_indices_boost(self, indices_boost):

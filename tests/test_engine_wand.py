@@ -288,3 +288,156 @@ def test_mine_hard_negatives(wand):
     assert [
         r["doc_id"] for r in sorted(by_q["q1"], key=lambda r: r["rank"])
     ] == exp1
+
+
+# ------------------------------------------------------------ lanes
+
+
+def _spark_jobs(spark, fn):
+    """-> (number of Spark jobs fn() started, fn's result)."""
+    import uuid
+
+    sc = spark.sparkContext
+    gid = f"lane-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, gid)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(gid)), out
+
+
+@pytest.fixture(scope="module")
+def tombstoned_index(spark, unit_corpus, tmp_path_factory):
+    from lucille_spark.index import IndexBuilder
+    from lucille_spark.index.maintenance import delete_docs
+    from lucille_spark.index.reader import SparkIndex
+
+    out = str(tmp_path_factory.mktemp("ix") / "lanes_del")
+    IndexBuilder(num_shards=4, block_size=32).build(
+        spark.createDataFrame(unit_corpus), out
+    )
+    delete_docs(spark, out, list(range(0, 200, 7)))
+    ix = SparkIndex(spark, out)
+    assert ix.deleted_count > 0
+    return ix
+
+
+def _lane_rows(monkeypatch, ix, lane, q, **kw):
+    import lucille_spark.exec_wand as W
+
+    monkeypatch.setattr(
+        W, "DRIVER_LANE_MAX_BLOCKS",
+        float("inf") if lane == "driver" else -1.0,
+    )
+    rows = W.WandExecutor(ix).search(q, k=10, **kw).collect()
+    return [tuple(r) for r in rows]
+
+
+@pytest.mark.parametrize("case", ["plain", "tombstones", "boosts", "meta"])
+def test_lane_parity(monkeypatch, unit_index, tombstoned_index, case):
+    """The driver lane and the per-shard lane return identical
+    (doc_id, score) top-k rows for every reference query shape the
+    driver lane may take."""
+    from lucille_spark import plans as P
+    from lucille_spark.exec_wand import _estimated_blocks
+
+    ix = tombstoned_index if case == "tombstones" else unit_index[0]
+    kw = {}
+    if case == "boosts":
+        kw["doc_boosts"] = [(0, 60, 2.0), (40, 120, 0.5)]
+    if case == "meta":
+        kw["with_meta"] = True
+    compared = 0
+    for q in REFERENCE_QUERIES:
+        node = ix.plan(q)
+        if P.needs_universe(node) or P.needs_positions(node):
+            continue  # per-shard lane whatever the threshold
+        assert _estimated_blocks(ix, P.collect_terms(node)) is not None
+        a = _lane_rows(monkeypatch, ix, "driver", q, **kw)
+        b = _lane_rows(monkeypatch, ix, "shard", q, **kw)
+        assert a == b, q
+        compared += bool(a)
+    assert compared >= 20
+
+
+def test_small_term_query_is_one_scan_job(spark, unit_index, monkeypatch):
+    """A small term query runs exactly one Spark job (the Arrow scan
+    of its segment slice), with no Python-UDF stage in its plan; the
+    returned frame collects without a job."""
+    from lucille_spark.exec_wand import WandExecutor
+
+    ix = unit_index[0]
+    DataFrame = type(ix.segments)
+    plans = []
+    orig = DataFrame.toArrow
+
+    def spy(self):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return orig(self)
+
+    monkeypatch.setattr(DataFrame, "toArrow", spy)
+    n, rows = _spark_jobs(
+        spark, lambda: WandExecutor(ix).search("cats", k=10).collect()
+    )
+    assert rows
+    assert n == 1
+    assert len(plans) == 1
+    assert "FlatMapGroupsInPandas" not in plans[0]
+    assert "positions" not in plans[0]  # the positions are not read
+
+
+def test_warmup_runs_every_lane(unit_index, monkeypatch):
+    """warmup() exercises the driver lane, the plain per-shard lane
+    (a positional plan) and the cogrouped per-shard lane."""
+    from lucille_spark.exec_wand import WandExecutor
+
+    ran = []
+    orig_driver = WandExecutor._driver_lane
+    orig_shard = WandExecutor._shard_lane
+
+    def driver(self, *a, **kw):
+        ran.append("driver")
+        return orig_driver(self, *a, **kw)
+
+    def shard(self, node, segs, k, need_uni, *rest):
+        ran.append("cogroup" if need_uni else "plain")
+        return orig_shard(self, node, segs, k, need_uni, *rest)
+
+    monkeypatch.setattr(WandExecutor, "_driver_lane", driver)
+    monkeypatch.setattr(WandExecutor, "_shard_lane", shard)
+    WandExecutor(unit_index[0]).warmup()
+    assert sorted(ran) == ["cogroup", "driver", "plain"]
+
+
+def test_decode_skips_unwanted_positions(unit_index):
+    """A posting built without positions decodes three streams per
+    block (ids, tfs, dls), not the positions as well."""
+    from lucille_spark.codec import varbyte_decode
+    from lucille_spark.exec_wand import _build_posting
+
+    ix = unit_index[0]
+    rows = ix.segments.filter("term = 'import'").toPandas()
+    assert len(rows) > 1 and rows["pos_counts"].notna().all()
+    calls = [0]
+
+    def counting(buf):
+        calls[0] += 1
+        return varbyte_decode(buf)
+
+    p = _build_posting(rows, False, counting)
+    assert p.positions is None
+    assert calls[0] == 3 * len(rows)
+    calls[0] = 0
+    assert _build_posting(rows, True, counting).positions is not None
+    assert calls[0] == 5 * len(rows)
+
+
+def test_top_k_zero_on_large_input():
+    from lucille_spark.eval_local import top_k
+
+    ids = np.arange(5000, dtype=np.int64)
+    scores = np.linspace(0.0, 1.0, 5000)
+    i, s = top_k(ids, scores, 0)
+    assert i.size == 0 and s.size == 0
+    assert i.dtype == np.int64 and s.dtype == np.float64

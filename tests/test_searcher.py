@@ -120,3 +120,36 @@ def test_request_cache_skips_parameterized_calls(spark, unit_index):
     assert s.request_cache_stats() == {
         "enabled": True, "entries": 0, "hits": 0, "misses": 0,
     }
+
+
+@pytest.mark.parametrize("arrow", ["true", "false"])
+def test_request_cache_hit_runs_no_job(spark, unit_index, arrow):
+    """A request-cache hit rebuilds its page without a Spark job,
+    whether or not the session enables Arrow."""
+    import uuid
+
+    from lucille_spark.searcher import Searcher
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, arrow)
+    try:
+        s = Searcher(spark, unit_index[0].dir, cache=False)
+        s.enable_request_cache()
+        for with_meta in (False, True):
+            first = s.search("cat AND ocean", k=5, with_meta=with_meta)
+            first = first.collect()
+            sc = spark.sparkContext
+            gid = f"rcache-{uuid.uuid4().hex}"
+            sc.setJobGroup(gid, gid)
+            try:
+                again = s.search(
+                    "cat AND ocean", k=5, with_meta=with_meta
+                ).collect()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            assert again == first and first
+            assert sc.statusTracker().getJobIdsForGroup(gid) == []
+        assert s.request_cache_stats()["hits"] == 2
+    finally:
+        spark.conf.set(key, before)
